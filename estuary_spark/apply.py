@@ -55,7 +55,14 @@ from estuary_spark.config import (
     SyncConfig,
 )
 from estuary_spark.operators.lww import lww_reduce
-from estuary_spark.tables import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable, bucket_expr
+from estuary_spark.tables import (
+    BUCKET_COL,
+    DELETED_COL,
+    LSN_COL,
+    CommitConflictError,
+    LakeTable,
+    bucket_expr,
+)
 
 
 def order_for_strategy(changes: DataFrame, cfg: SyncConfig) -> DataFrame:
@@ -463,7 +470,8 @@ def apply_batch(
     winners = lww_reduce(changes, key_cols, lsn_col="lsn", salt_factor=salt, op_col="op")
 
     # ---- bucket routing (P2): the hash shuffle is the consistent-hash router
-    winners = winners.withColumn(BUCKET_COL, bucket_expr(key_cols[0], table.manifest()["n_buckets"]))
+    routed = table.manifest()
+    winners = winners.withColumn(BUCKET_COL, bucket_expr(key_cols[0], routed["n_buckets"]))
     winners = winners.persist()
 
     if cfg.write_mode == "mor":
@@ -493,8 +501,17 @@ def apply_batch(
     # the merge is computed from and pass it as the commit's conflict-
     # validation base: a concurrent writer (maintenance job, rival sync)
     # landing between this read and the commit must surface as
-    # CommitConflictError, not silently lose its files.
+    # CommitConflictError, not silently lose its files. A rebucket that
+    # landed since the winners were routed is a conflict too: their bucket
+    # ids follow the old modulus, and merging them into the new layout
+    # would leave keys in two buckets.
     base_v = table.current_version()
+    if base_v != routed["version"] and table._raw_manifest(base_v)["n_buckets"] != routed["n_buckets"]:
+        winners.unpersist()
+        raise CommitConflictError(
+            f"{table.root!r} was rebucketed while batch {batch_id} was routed; "
+            "recompute the batch from the latest snapshot"
+        )
     target = table.read(spark, buckets=touched, include_tombstones=True, version=base_v)
 
     s = winners.select(

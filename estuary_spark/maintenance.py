@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from estuary_spark.config import SyncConfig
 from estuary_spark.tables import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable
 
 
@@ -53,6 +54,26 @@ def compact(
         base_version=m["version"],
     )
     return len(fat)
+
+
+def compact_if_due(spark: SparkSession, table: LakeTable, cfg: SyncConfig) -> int:
+    """The MoR delta-chain policy every sync driver runs after each
+    committed batch: once a bucket of ``table`` holds ``cfg.compact_every``
+    delta files, fold the buckets holding that many into their base files
+    (read cost is ~(1 + deltas/base), so compaction bounds the read tax).
+    A no-op for copy-on-write tables and for ``compact_every=0`` (manual
+    compaction). Returns the number of buckets compacted."""
+    if cfg.write_mode != "mor" or cfg.compact_every <= 0:
+        return 0
+    dcounts = table.manifest().get("delta_files", {})
+    if not dcounts or max(len(v) for v in dcounts.values()) < cfg.compact_every:
+        return 0
+    return compact(
+        spark,
+        table,
+        max_files_per_bucket=10**9,
+        max_delta_files_per_bucket=cfg.compact_every - 1,
+    )
 
 
 def purge_tombstones(spark: SparkSession, table: LakeTable, watermark_lsn: int) -> int:

@@ -42,6 +42,7 @@ from estuary_spark.checkpoint import (
 )
 from estuary_spark.config import SyncConfig
 from estuary_spark.lineage import append_lineage
+from estuary_spark.maintenance import compact_if_due
 from estuary_spark.runner import open_or_create_table, plan_batches
 from estuary_spark.sources.log_source import LogSource, ParquetLogSource
 from estuary_spark.tables import BUCKET_COL, LakeTable
@@ -685,7 +686,7 @@ def run_sync_multi(
         # per-table applies below reuse
         batch = _apply_table_ops(raw, cfg, tables)
         # concurrent per-table fan-out (see _apply_fanout)
-        for dst, _scfg, res in _apply_fanout(
+        for dst, scfg, res in _apply_fanout(
             spark, batch, cfg, tables, batch_id, offset_range=(lo, hi)
         ):
             stats = per_table.setdefault(
@@ -695,6 +696,7 @@ def run_sync_multi(
                 stats["batches_run"] += 1
                 stats["rows_upserted"] += sum(r["rows_upserted"] for r in res.lineage)
                 stats["rows_deleted"] += sum(r["rows_deleted"] for r in res.lineage)
+                compact_if_due(spark, tables[dst], scfg)
         raw.unpersist()
         last_lsn = hi
         batch_id += 1
@@ -737,7 +739,7 @@ def run_sync_streaming_multi(
         # concurrent per-table fan-out (see _apply_fanout); file batches
         # carry no planned offset range, so replay safety rests on each
         # table's wins==0 no-op detection (check_applied_range=False)
-        for dst, _scfg, res in _apply_fanout(
+        for dst, scfg, res in _apply_fanout(
             sess, routed, cfg, tables, int(batch_id),
             offset_range=None, check_applied_range=False,
         ):
@@ -745,6 +747,7 @@ def run_sync_streaming_multi(
             if not res.skipped:
                 t["batches_run"] += 1
                 t["rows_upserted"] += sum(r["rows_upserted"] for r in res.lineage)
+                compact_if_due(sess, tables[dst], scfg)
         raw.unpersist()
 
     writer = (

@@ -27,6 +27,7 @@ from estuary_spark.checkpoint import (
 )
 from estuary_spark.config import SyncConfig
 from estuary_spark.lineage import append_lineage
+from estuary_spark.maintenance import compact_if_due
 from estuary_spark.sources.log_source import LogSource, ParquetLogSource
 from estuary_spark.tables import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable
 
@@ -159,20 +160,8 @@ def run_sync(
         applied += 0 if res.skipped else 1
         last_lsn = hi
         batch_id += 1
-        # MoR: fold delta files back into base once a bucket accumulates
-        # cfg.compact_every of them (read cost is ~(1 + deltas/base) so
-        # compaction bounds the read tax; runs bucket-parallel)
-        if cfg.write_mode == "mor" and cfg.compact_every > 0 and not res.skipped:
-            from estuary_spark.maintenance import compact
-
-            dcounts = table.manifest().get("delta_files", {})
-            if dcounts and max(len(v) for v in dcounts.values()) >= cfg.compact_every:
-                compact(
-                    spark,
-                    table,
-                    max_files_per_bucket=10**9,
-                    max_delta_files_per_bucket=max(0, cfg.compact_every - 1),
-                )
+        if not res.skipped:
+            compact_if_due(spark, table, cfg)
         if cfg.checkpoint_path:
             save_checkpoint(
                 cfg.checkpoint_path, {"next_lsn": hi + 1, "next_batch_id": batch_id}

@@ -12,6 +12,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Every LakeTable scan passes the manifest's file paths to
+# ``spark.read.parquet``. Above 32 paths Spark lists them with a Spark job,
+# one task per path whatever the file sizes. Building a read over 96 files
+# on a 4-core local session took 705 ms that way and 71 ms with the driver
+# listing them; over 3,840 files, 13.9 s against 0.62 s. Raising the
+# threshold keeps every table read, hence the MoR lineage fold and
+# compaction, free of that per-batch listing job.
+LISTING_THRESHOLD = ("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
+
 
 def get_spark(
     app_name: str = "estuary_spark",
@@ -44,10 +53,23 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("ESTUARY_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config(*LISTING_THRESHOLD)
     )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def submit_session(app_name: str) -> SparkSession:
+    """The session of a spark-submit job: master and conf come from the
+    launcher, and ``LISTING_THRESHOLD`` applies unless the launcher sets
+    that key itself."""
+    spark = SparkSession.builder.appName(app_name).getOrCreate()
+    key, value = LISTING_THRESHOLD
+    if not spark.sparkContext.getConf().contains(key):
+        spark.conf.set(key, value)
     spark.sparkContext.setLogLevel("WARN")
     return spark

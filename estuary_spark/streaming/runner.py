@@ -29,6 +29,7 @@ from pyspark.sql import SparkSession
 from estuary_spark.apply import apply_batch
 from estuary_spark.config import SyncConfig
 from estuary_spark.lineage import append_lineage
+from estuary_spark.maintenance import compact_if_due
 from estuary_spark.runner import open_or_create_table
 from estuary_spark.sources.log_source import LogSource, ParquetLogSource
 
@@ -82,20 +83,9 @@ def run_sync_streaming(
         stats["deleted"] += sum(r["rows_deleted"] for r in res.lineage)
         if cfg.lineage_dir:
             append_lineage(sess, cfg.lineage_dir, res.lineage)
-        # MoR: bound the per-bucket delta chain (same policy as the batch
-        # runner) — foreachBatch is the drained-pipeline point, so the
-        # compaction commit can't race an in-flight merge
-        if cfg.write_mode == "mor" and cfg.compact_every > 0:
-            from estuary_spark.maintenance import compact
-
-            dcounts = table.manifest().get("delta_files", {})
-            if dcounts and max(len(v) for v in dcounts.values()) >= cfg.compact_every:
-                compact(
-                    sess,
-                    table,
-                    max_files_per_bucket=10**9,
-                    max_delta_files_per_bucket=max(0, cfg.compact_every - 1),
-                )
+        # foreachBatch is the drained-pipeline point, so the compaction
+        # commit can't race an in-flight merge
+        compact_if_due(sess, table, cfg)
 
     writer = (
         stream.writeStream.foreachBatch(handle)

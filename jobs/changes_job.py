@@ -91,10 +91,9 @@ def main() -> None:
     ap.add_argument("--app-name", default="estuary-spark-changes")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from estuary_spark.session import submit_session
 
-    spark = SparkSession.builder.appName(args.app_name).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = submit_session(args.app_name)
 
     key_cols = tuple(c for c in args.key_cols.split(",") if c)
 

@@ -61,13 +61,11 @@ def main() -> None:
     ap.add_argument("--app-name", default="estuary-spark-maintenance")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from estuary_spark.maintenance import compact, purge_tombstones, rebucket
+    from estuary_spark.session import submit_session
     from estuary_spark.tables import LakeTable
 
-    spark = SparkSession.builder.appName(args.app_name).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = submit_session(args.app_name)
 
     if args.multi:
         roots = sorted(

@@ -97,6 +97,9 @@ class TaskManager:
             return self.status(name)
 
     def stop(self, name: str, timeout: float = 30.0) -> dict:
+        """Terminate the task, escalating to SIGKILL after ``timeout``. A
+        process that outlives the kill too (stuck in the kernel, say) is
+        reported with ``"state": "killing"`` rather than as an error."""
         with self._lock:
             t = self._tasks.get(name)
             if t is None:
@@ -110,7 +113,10 @@ class TaskManager:
             t["proc"].wait(timeout=timeout)
         except subprocess.TimeoutExpired:
             t["proc"].kill()
-            t["proc"].wait(timeout=timeout)
+            try:
+                t["proc"].wait(timeout=timeout)
+            except subprocess.TimeoutExpired:
+                return {**self.status(name), "state": "killing"}
         return self.status(name)
 
     def restart(self, name: str) -> dict:
@@ -120,7 +126,9 @@ class TaskManager:
                 raise KeyError(f"unknown task {name!r}")
             args = list(t["args"])
         if self._alive(t):
-            self.stop(name)
+            doc = self.stop(name)
+            if doc.get("state") == "killing":
+                return doc  # never run two copies of one task
         with self._lock:
             # the lock was released across the stop: a concurrent new()/
             # restart() may have replaced the entry — respawning here

@@ -9,7 +9,9 @@ Packaging (the north rule's ship shape):
         --buckets 1024 --events-per-batch 10000000
 
 On a cluster, add --master/--num-executors etc. to spark-submit; this
-script only builds the session from the ambient config. ``--streaming``
+script only builds the session from the ambient config, adding the
+engine's driver-side listing threshold (``session.LISTING_THRESHOLD``)
+unless the launcher sets that key. ``--streaming``
 switches to the Structured Streaming front-end (checkpoint dir instead of
 JSON file). Config flags mirror the estuary task-bean knobs that still
 make sense on Spark (SURVEY.md K1/K4): partition strategy, batch sizing,
@@ -99,14 +101,11 @@ def main() -> None:
 
     renames = dict(kv.split("=", 1) for kv in args.table_rename.split(",") if "=" in kv)
 
-    from pyspark.sql import SparkSession
-
     from estuary_spark.config import SyncConfig
     from estuary_spark.runner import run_sync
+    from estuary_spark.session import submit_session
 
-    # under spark-submit the master/conf come from the launcher
-    spark = SparkSession.builder.appName(args.app_name).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = submit_session(args.app_name)
 
     cfg = SyncConfig(
         source_log_dir=args.source,

@@ -202,6 +202,9 @@ def test_parse_ddl_round5_statements():
     # index-level drops are NOT column drops
     assert parse_ddl("ALTER TABLE t DROP PRIMARY KEY")["op"] == "unsupported"
     assert parse_ddl("ALTER TABLE t DROP INDEX i")["op"] == "unsupported"
+    # ...but after an explicit COLUMN a reserved word is a column name
+    p = parse_ddl("ALTER TABLE t DROP COLUMN key, DROP COLUMN `index`")
+    assert p["op"] == "drop_column" and p["columns"] == ["key", "index"]
 
     p = parse_ddl("ALTER TABLE t CHANGE COLUMN tool tool_name VARCHAR(64)")
     assert p["op"] == "rename_column" and p["renames"] == [("tool", "tool_name")]

@@ -10,14 +10,15 @@ indistinguishable from COW — same invariant as the reference's idempotent
 /root/reference)."""
 
 import os
+import uuid
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from estuary_spark.config import SyncConfig
 from estuary_spark.generator import LogSpec, expected_final_state, read_log, write_log
 from estuary_spark.maintenance import compact
 from estuary_spark.runner import read_final_state, run_sync
-from estuary_spark.tables import LakeTable
+from estuary_spark.tables import BUCKET_COL, DELETED_COL, LSN_COL, LakeTable, bucket_expr
 
 
 def _state(df):
@@ -255,3 +256,73 @@ def test_mor_delete_then_reinsert_across_batches(spark, tmpdir_path):
     out = read_final_state(spark, cfg).collect()
     assert len(out) == 1
     assert out[0]["text"] == "v3"
+
+
+def _delta_batch(spark, lsns, n_buckets, text):
+    rows = [(f"c{lsn % 97}", f"{text}-{lsn}", lsn) for lsn in lsns]
+    return (
+        spark.createDataFrame(rows, ["conv_id", "text", LSN_COL])
+        .withColumn(DELETED_COL, F.lit(False))
+        .withColumn(BUCKET_COL, bucket_expr("conv_id", n_buckets))
+    )
+
+
+def _jobs_launched(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn`` launches on this thread."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scans_of_many_manifest_files_launch_no_listing_job(spark, tmpdir_path):
+    """Spark lists more than 32 input paths with a distributed job unless
+    the session's listing threshold is raised; a LakeTable scan already
+    knows its files from the manifest, so building the DataFrame must
+    launch no job at all."""
+    n_buckets = 48
+    schema = T.StructType([T.StructField("conv_id", T.StringType()), T.StructField("text", T.StringType())])
+    t = LakeTable.create(os.path.join(tmpdir_path, "t"), schema, n_buckets=n_buckets, key_cols=["conv_id"])
+    t.commit_delta(spark, _delta_batch(spark, range(400), n_buckets, "a"), (0, 399), 0)
+    assert sum(len(fl) for fl in t.manifest()["delta_files"].values()) > 32
+
+    assert _jobs_launched(spark, lambda: t.read(spark)) == []
+    assert _jobs_launched(spark, lambda: t.read_unfolded(spark)) == []
+    assert _jobs_launched(spark, lambda: t.read_changes(spark, 0)) == []
+
+
+def test_core_sized_write_tasks_keep_one_file_per_bucket(spark, tmpdir_path):
+    """With more buckets than cores, each write task holds several buckets;
+    a delta commit and a compaction must still add exactly one file per
+    bucket they touch."""
+    n_buckets = 4 * spark.sparkContext.defaultParallelism
+    schema = T.StructType([T.StructField("conv_id", T.StringType()), T.StructField("text", T.StringType())])
+    t = LakeTable.create(os.path.join(tmpdir_path, "t"), schema, n_buckets=n_buckets, key_cols=["conv_id"])
+
+    def touched(df) -> set[str]:
+        return {str(r[0]) for r in df.select(BUCKET_COL).distinct().collect()}
+
+    first = _delta_batch(spark, range(300), n_buckets, "a")
+    t.commit_delta(spark, first, (0, 299), 0)
+    m = t.manifest()
+    assert {b for b, fl in m["delta_files"].items() if fl} == touched(first)
+    assert all(len(fl) == 1 for fl in m["delta_files"].values())
+
+    second = _delta_batch(spark, range(300, 340), n_buckets, "b")
+    t.commit_delta(spark, second, (300, 339), 1)
+    m2, first_b, second_b = t.manifest(), touched(first), touched(second)
+    for b, fl in m2["delta_files"].items():
+        assert len(fl) == len(m["delta_files"].get(b, [])) + (b in second_b)
+
+    assert compact(spark, t, max_delta_files_per_bucket=0) == len(first_b)
+    m3 = t.manifest()
+    assert not any(m3["delta_files"].values())
+    assert {b for b, fl in m3["files"].items() if fl} == first_b
+    assert all(len(fl) == 1 for fl in m3["files"].values())
+    got = {(r["conv_id"], r["text"]) for r in t.read(spark).collect()}
+    want = {f"c{lsn % 97}": f"{'b' if lsn >= 300 else 'a'}-{lsn}" for lsn in range(340)}
+    assert got == set(want.items())

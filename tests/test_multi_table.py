@@ -305,3 +305,37 @@ def test_parallel_fanout_failure_isolated(spark, tmpdir_path):
     run_sync_multi(spark, cfg2, events_per_batch=100)
     got2 = {(r["conv_id"], r["text"]) for r in good.read(spark).collect()}
     assert got2 == got
+
+
+def test_multi_table_mor_auto_compacts_every_table(spark, tmpdir_path):
+    """Each destination of a multi-table MoR sync follows the single-table
+    compaction policy: no bucket's delta chain reaches ``compact_every``,
+    and the compacted tables still hold the LWW fold of their events."""
+    import random
+
+    rng = random.Random(11)
+    rows, state = [], {}
+    for lsn in range(1, 601):
+        tbl, key = f"db1.t{rng.randrange(3)}", (f"c{rng.randrange(30)}", rng.randrange(2))
+        op = "delete" if (tbl, key) in state and rng.random() < 0.2 else "upsert"
+        text = None if op == "delete" else f"v{lsn}"
+        rows.append((lsn, "delete" if op == "delete" else "insert", tbl, *key, text))
+        if op == "delete":
+            state.pop((tbl, key))
+        else:
+            state[(tbl, key)] = text
+    df = spark.createDataFrame(rows, COLS).withColumn("turn_idx", F.col("turn_idx").cast("int"))
+    df.repartitionByRange(4, "lsn").write.parquet(os.path.join(tmpdir_path, "log"))
+
+    cfg = _mk_cfg(tmpdir_path, write_mode="mor", compact_every=2)
+    out = run_sync_multi(spark, cfg, events_per_batch=60)
+    assert out["batches"] >= 8 and len(out["tables"]) == 3
+
+    for dst in out["tables"]:
+        chains = LakeTable(os.path.join(cfg.target_table_dir, dst)).manifest()["delta_files"]
+        assert all(len(fl) < cfg.compact_every for fl in chains.values()), (dst, chains)
+    got = {
+        (r["_dst_table"], (r["conv_id"], r["turn_idx"])): r["text"]
+        for r in read_final_state_multi(spark, cfg).collect()
+    }
+    assert got == state

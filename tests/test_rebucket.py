@@ -143,6 +143,45 @@ def test_rebucket_races_live_sync_converges(spark, tmpdir_path):
     )
 
 
+def test_rebucket_after_routing_is_a_typed_conflict(spark, tmpdir_path, monkeypatch):
+    """The race above, made deterministic: a rebucket publishes after a
+    copy-on-write batch routed its winners by the old bucket count. The
+    batch must raise CommitConflictError rather than merge old-modulus
+    rows into the new layout (keys left in two buckets), and the
+    checkpointed retry converges to the fold."""
+    import pytest
+
+    import estuary_spark.apply as apply_mod
+    from estuary_spark.tables import CommitConflictError
+
+    log_dir = os.path.join(tmpdir_path, "log")
+    root = os.path.join(tmpdir_path, "t")
+    write_log(spark, LogSpec(n_convs=40, max_turns=8, seed=85, delete_pct=20), log_dir)
+    log = read_log(spark, log_dir)
+    cfg = SyncConfig(
+        source_log_dir=log_dir, target_table_dir=root, n_buckets=8,
+        checkpoint_path=os.path.join(tmpdir_path, "ck.json"),
+    )
+    run_sync(spark, cfg, events_per_batch=100, max_batches=1)
+
+    route = apply_mod.bucket_expr
+
+    def rebucket_then_route(key_col, n_buckets):
+        monkeypatch.setattr(apply_mod, "bucket_expr", route)
+        rebucket(spark, LakeTable(root), 32)
+        return route(key_col, n_buckets)
+
+    monkeypatch.setattr(apply_mod, "bucket_expr", rebucket_then_route)
+    with pytest.raises(CommitConflictError):
+        run_sync(spark, cfg, events_per_batch=100)
+
+    run_sync(spark, cfg, events_per_batch=100)
+    tb = LakeTable(root)
+    assert tb.manifest()["n_buckets"] == 32
+    assert _state(spark, root) == _fold(spark, log)
+    assert tb.read(spark).filter(F.col(BUCKET_COL) != bucket_expr("conv_id", 32)).count() == 0
+
+
 def test_concurrent_rebuckets_one_typed_loser(spark, tmpdir_path):
     """Two rebuckets computed from the SAME snapshot: exactly one
     publishes; the other must get the typed CommitConflictError (its

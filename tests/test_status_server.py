@@ -246,3 +246,49 @@ def test_control_stop_kills_running_task(spark, tmpdir_path):
     finally:
         srv.shutdown()
         tasks.shutdown()
+
+
+def test_stop_reports_killing_when_the_kill_times_out(tmpdir_path):
+    """A task that outlives SIGKILL's wait is reported as ``killing`` (HTTP
+    200), not a 500, and restart does not spawn a second copy of it."""
+    import subprocess
+    import time
+
+    from jobs.status_server import TaskManager
+
+    class Unkillable:
+        pid = 4242
+        signals: list[str] = []
+
+        def poll(self):
+            return None
+
+        def terminate(self):
+            self.signals.append("TERM")
+
+        def kill(self):
+            self.signals.append("KILL")
+
+        def wait(self, timeout=None):
+            raise subprocess.TimeoutExpired("sync_job.py", timeout)
+
+    tasks = TaskManager()
+    proc = Unkillable()
+    tasks._tasks["stuck"] = {"proc": proc, "args": [], "started_at": time.time()}
+
+    def no_spawn(name, args):
+        raise AssertionError("restart spawned while the old process is alive")
+
+    tasks._spawn = no_spawn
+    srv = make_server(tmpdir_path, multi=True, port=0, tasks=tasks)
+    port = srv.server_address[1]
+    th = threading.Thread(target=srv.serve_forever, daemon=True)
+    th.start()
+    try:
+        code, doc = _post(port, "/tasks/stuck/stop")
+        assert code == 200 and doc["state"] == "killing" and doc["running"]
+        assert proc.signals == ["TERM", "KILL"]
+        code, doc = _post(port, "/tasks/stuck/restart")
+        assert code == 200 and doc["state"] == "killing"
+    finally:
+        srv.shutdown()
